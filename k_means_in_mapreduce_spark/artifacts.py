@@ -52,16 +52,17 @@ _FP_MEMO: dict[str, tuple[tuple, str]] = {}
 
 
 def _shallow_sig(path: str) -> tuple:
-    """O(1) staleness signature for :func:`source_fingerprint`'s memo: the
+    """Cheap staleness signature for :func:`source_fingerprint`'s memo: the
     stat of the path entry itself plus, for directories, the _SUCCESS
-    marker's stat. Regeneration always invalidates it on this repo's write
-    paths: a single-file table is covered exactly (its own size+mtime IS
-    the fingerprint input), and every directory table is written by Spark
-    ``mode("overwrite")``, which deletes and recreates the directory (new
-    inode + mtime) and rewrites _SUCCESS. The documented staleness trade:
-    a data file mutated IN PLACE inside a subdirectory, preserving the
-    root dir's entry and _SUCCESS, would be missed until process restart —
-    no supported writer does that."""
+    marker's stat and the root's entry count and newest entry mtime (one
+    listing of the root, never a recursive walk). A single-file table is
+    covered exactly (its own size+mtime IS the fingerprint input); a
+    directory regenerated by Spark ``mode("overwrite")`` gets a new inode,
+    mtime and _SUCCESS; a data file added, removed or rewritten in place at
+    the root changes the count or the newest mtime. The documented
+    staleness trade: a data file rewritten IN PLACE inside a SUBdirectory,
+    preserving every root entry and _SUCCESS, is missed until process
+    restart — no supported writer does that."""
     st = os.stat(path)
     sig: tuple = (st.st_ino, st.st_mtime_ns, st.st_size)
     if os.path.isdir(path):
@@ -70,6 +71,9 @@ def _shallow_sig(path: str) -> tuple:
             sig += (s.st_ino, s.st_mtime_ns, s.st_size)
         except OSError:
             sig += (None, None, None)
+        with os.scandir(path) as it:
+            mtimes = [e.stat().st_mtime_ns for e in it]
+        sig += (len(mtimes), max(mtimes, default=None))
     return sig
 
 
@@ -77,9 +81,9 @@ def source_fingerprint(path: str) -> str:
     """Cheap content fingerprint of a parquet file/dir: name+size+mtime of
     every data file. Regenerated source data -> different fingerprint ->
     derived artifacts (bucketed copies, ANN indexes) are rebuilt instead
-    of silently reused. Memoized behind an O(1) shallow stat signature
-    (see :func:`_shallow_sig`) so the per-invocation cost is two stat
-    calls, not a recursive listing."""
+    of silently reused. Memoized behind a shallow stat signature (see
+    :func:`_shallow_sig`) so the per-invocation cost is a listing of the
+    root, not a recursive walk."""
     import hashlib
 
     apath = os.path.abspath(path)

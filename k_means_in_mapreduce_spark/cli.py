@@ -160,21 +160,21 @@ def _looks_like_run_output(path: str) -> bool:
 
 def _write_centroid_text(spark, centroids, path) -> None:
     """Reference TextOutputFormat shape: '<clusterId>\\t<c1, c2, ...>'
-    (KMeans.java:90,150; Point.java:96-106)."""
+    (KMeans.java:90,150; Point.java:96-106). The k rows are built in the
+    JVM (``literal_frame``), so the write job starts no Python worker."""
     from pyspark.sql import functions as F
 
-    from .sources.text_points import format_points
+    from .sources import format_points, literal_frame
 
-    cents = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)],
-        "cluster_id int, features array<double>",
+    cents = literal_frame(
+        spark, list(enumerate(centroids)), "cluster_id int, features array<double>"
     )
     lines = format_points(cents).select(
         F.concat_ws("\t", F.col("cluster_id").cast("string"), "point_str").alias(
             "value"
         )
     )
-    lines.coalesce(1).write.mode("overwrite").text(path)
+    lines.write.mode("overwrite").text(path)
 
 
 def _run_fit(

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from ..functions.text import normalized, tokens, word_ngrams
 from ..registry import query
 from ..sources import load_table
+from ..worker import drop_zip_import_cache
 
 NGRAM_N = 3
 JACCARD_THRESHOLD = 0.6
@@ -876,6 +877,7 @@ def _exact_cosine_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         import pyarrow.parquet as pq
 
+        drop_zip_import_cache()
         for pdf in batches:
             X = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             # zero vectors: norm 0 -> division yields NaN rows and NaN
@@ -996,6 +998,7 @@ def _ivf_pairs_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
+        drop_zip_import_cache()
         X = np.array(pdf["e"].tolist(), dtype=np.float64)
         ids = pdf["vec_id"].to_numpy()
         un = np.linalg.norm(X, axis=1, keepdims=True)

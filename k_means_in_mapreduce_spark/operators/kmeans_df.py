@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import nearest_centroid
+from ..worker import drop_zip_import_cache
 
 
 @dataclass
@@ -56,9 +57,10 @@ class KMeansConfig:
     seed: int = 42
     features_col: str = "embedding"
     # "expr": pure Catalyst expressions (oracle-checkable fidelity layer).
-    # "arrow": Arrow-batched NumPy in-mapper combiner via mapInPandas —
-    # ~3.5x faster per iteration (measured at n=100k, d=64, local[8]:
-    # 0.39s vs 1.34s); same protocol, same results up to fp summation order.
+    # "arrow": Arrow-batched NumPy in-mapper combiner via mapInArrow (see
+    # cluster_features_arrow) — same protocol, same results up to fp
+    # summation order; ~4x faster per iteration (n=100k, d=30, k=4 on a
+    # 4-core VM: 0.20 s vs 0.80 s, fit wall time / 10 iterations).
     method: str = "expr"
 
 
@@ -205,6 +207,7 @@ def cluster_features_arrow(
         import numpy as np
         import pyarrow as pa
 
+        drop_zip_import_cache()
         cn2 = (C * C).sum(axis=1)
         k, d = C.shape
         for batch in batches:
@@ -320,7 +323,7 @@ def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
     """
     if config.method not in ("expr", "arrow"):
         # fail fast: a typo'd method would otherwise silently run the
-        # ~3.5x slower expression path
+        # ~4x slower expression path
         raise ValueError(f"unknown method {config.method!r}: use 'expr' or 'arrow'")
     base = df.select(F.col(config.features_col).alias("features"))
 
@@ -421,8 +424,15 @@ def fit(df: DataFrame, config: KMeansConfig) -> KMeansModel:
                     base, config.k, config.seed + 1000 * reinits, "features"
                 )
                 continue
-            # centroid index integrity (reference C5, KMeans.java:252-257)
-            assert sorted(by_id) == list(range(config.k)), sorted(by_id)
+            # centroid index integrity (reference C5, KMeans.java:252-257);
+            # raised, not asserted, so it survives `python -O`
+            if sorted(by_id) != list(range(config.k)):
+                missing = sorted(set(range(config.k)) - set(by_id))
+                unexpected = sorted(set(by_id) - set(range(config.k)))
+                raise RuntimeError(
+                    f"iteration {it}: centroid ids are not 0..{config.k - 1}: "
+                    f"missing {missing}, unexpected {unexpected}"
+                )
 
             new_centroids = [list(by_id[i]["centroid"]) for i in range(config.k)]
             move = _movement(centroids, new_centroids)

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import load_table
+from ..worker import drop_zip_import_cache
 
 MEDIA_TYPES = ("image", "audio", "video")
 
@@ -142,6 +143,7 @@ def multimodal_decode_meta(
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pandas as pd  # noqa: F811 — by-value closure
 
+        drop_zip_import_cache()
         for pdf in batches:
             metas = [
                 _fake(blob, mt)
@@ -243,6 +245,7 @@ def multimodal_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd  # noqa: F811
 
+        drop_zip_import_cache()
         idx = np.arange(1, 9, dtype=np.int64)
         for pdf in batches:
             n = pdf["blob"].map(len).to_numpy(dtype=np.int64)
@@ -632,6 +635,7 @@ def multimodal_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     def gen_and_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pandas as pd  # noqa: F811 — by-value closure
 
+        drop_zip_import_cache()
         for pdf in batches:
             made = [encode_for_doc(int(i)) for i in pdf["doc_id"]]
             metas = [dec(b) for _, b in made]
@@ -690,6 +694,7 @@ def multimodal_frame_stats_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     def frame_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pandas as pd  # noqa: F811 — by-value closure
 
+        drop_zip_import_cache()
         for pdf in batches:
             out = {"doc_id": [], "frame_idx": [], "mean_y": []}
             for doc_id in pdf["doc_id"]:

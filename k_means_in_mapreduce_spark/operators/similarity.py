@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ..functions.vector import cosine_similarity
 from ..registry import query
 from ..sources import load_table
+from ..worker import drop_zip_import_cache
 
 TOP_K = 10
 QUERY_VEC_ID = 0
@@ -528,6 +529,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
+        drop_zip_import_cache()
         qb = qbits.reshape(n_tables, n_planes)
         for pdf in batches:
             X = np.array(pdf["embedding"].tolist(), dtype=np.float64)

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..registry import query
+from ..worker import drop_zip_import_cache
 from .windows import read_events_stream, _run_to_memory
 
 _STATE_SCHEMA = "n bigint, total double, last_ts timestamp"
@@ -33,12 +34,14 @@ def running_totals_agg(ev: DataFrame) -> DataFrame:
     checkpoint stop/restart test (tests/test_streaming_semantics.py)."""
 
     # Self-contained closure: executor Python workers don't have this
-    # package on sys.path, so no references to module globals.
+    # package on sys.path, so the only module global it names is the
+    # by-value drop_zip_import_cache.
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         import pandas as pd
 
+        drop_zip_import_cache()
         n, total, last_ts = (
             state.get if state.exists else (0, None, None)
         )
@@ -150,6 +153,7 @@ def idle_timeout_sessions(ev: DataFrame, gap_sec: int = 1800) -> DataFrame:
 
         import pandas as pd
 
+        drop_zip_import_cache()
         if state.hasTimedOut:
             n, total, start_ts, last_ts = state.get
             state.remove()

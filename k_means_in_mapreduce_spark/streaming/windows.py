@@ -420,6 +420,7 @@ def stream_kmeans_scoring(
     state — the streaming analogue of the reference's scoring pass, with
     the centroid set as the broadcast model."""
     from ..operators.kmeans_df import assign_clusters
+    from ..sources import literal_frame
 
     # Probe the file's own schema like read_events_stream does — a
     # hard-coded struct silently misreads a regenerated fixture whose
@@ -478,5 +479,7 @@ def stream_kmeans_scoring(
             "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
         )
 
-    rows = [(cid, n) for cid, n in sorted(totals.items())]
-    return spark.createDataFrame(rows, "cluster_id int, num_points bigint")
+    # built in the JVM: no Python worker for a k-row (or empty) result
+    return literal_frame(
+        spark, sorted(totals.items()), "cluster_id int, num_points bigint"
+    )

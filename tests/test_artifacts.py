@@ -398,7 +398,7 @@ def test_scratch_entry_pattern_adversarial_suffix_dirs():
 
 
 # ---------------------------------------------------------------------------
-# source_fingerprint: memoized behind an O(1) shallow stat signature (r22).
+# source_fingerprint: memoized behind a shallow stat signature (r22).
 # These tests pin the regeneration-rebuilds guarantee through the memo: a
 # rewritten file, an overwrite-recreated directory, and a rewritten
 # _SUCCESS marker must all change the fingerprint; an unchanged source must
@@ -456,6 +456,26 @@ def test_source_fingerprint_changes_on_success_rewrite(tmp_path):
     os.utime(p, ns=(1, 1))
     (d / "_SUCCESS").write_bytes(b"")
     os.utime(d / "_SUCCESS", ns=(2, 2))
+    assert A.source_fingerprint(str(d)) != fp1
+
+
+def test_source_fingerprint_changes_on_root_file_rewritten_in_place(tmp_path):
+    """A data file at the table directory's root rewritten in place (same
+    name, so the directory's own entry is untouched, _SUCCESS untouched)
+    must not be served a stale memoized fingerprint."""
+    d = tmp_path / "table.parquet"
+    d.mkdir()
+    p = d / "part-0"
+    p.write_bytes(b"old")
+    (d / "_SUCCESS").write_bytes(b"")
+    os.utime(p, ns=(10**18, 10**18))
+    dir_stat = os.stat(d)
+    fp1 = A.source_fingerprint(str(d))
+
+    with open(p, "r+b") as fh:  # in place: no new directory entry
+        fh.write(b"new")
+    os.utime(p, ns=(2 * 10**18, 2 * 10**18))
+    assert os.stat(d).st_mtime_ns == dir_stat.st_mtime_ns
     assert A.source_fingerprint(str(d)) != fp1
 
 

@@ -270,11 +270,20 @@ def test_incorporation_rotates_windowed_queries_behind_first_past_window(
     monkeypatch.setattr(gl, "LEDGER_PATH", str(path))
     assert gl.derive_order(sub_queries, oracles=set(names)) == window + past
 
-    head = subprocess.run(
-        ["git", "-C", gl.REPO_ROOT, "rev-parse", "HEAD"],
-        capture_output=True, text=True, check=True,
-    ).stdout.strip()
-    monkeypatch.setattr(gl, "_introducing_commit", lambda name: head)
+    # the window is re-proved green AT THE CURRENT CODE, so the gate commit
+    # must hold the working tree: `git stash create` snapshots uncommitted
+    # edits as a commit without touching HEAD or the index, and prints
+    # nothing on a clean tree, where HEAD already matches. Stamping at HEAD
+    # while edits are pending would (rightly) rank the window
+    # changed-since-green and hide the rotation this test checks.
+    def git(*args):
+        return subprocess.run(
+            ["git", "-C", gl.REPO_ROOT, *args],
+            capture_output=True, text=True, check=True,
+        ).stdout.strip()
+
+    gate = git("stash", "create") or git("rev-parse", "HEAD")
+    monkeypatch.setattr(gl, "_introducing_commit", lambda name: gate)
     # the driver gates the 2-slot window and re-proves it green (r5)
     _write_round(tmp_path, "r5", {n: GREEN for n in window})
     assert gl.incorporate_correctness(ledger, repo_root=str(tmp_path))

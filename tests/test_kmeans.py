@@ -584,3 +584,119 @@ def test_cli_fidelity_preflight_is_listdir_not_per_index_stat(
         signal.alarm(0)
         signal.signal(signal.SIGALRM, prev)
     assert os.path.isdir(f"{out}1")
+
+
+def test_centroid_id_integrity_raises_with_ids(spark, monkeypatch):
+    """C5 is a raised error, not an assert (`python -O` strips asserts),
+    and it names the missing and unexpected cluster ids."""
+    df = spark.createDataFrame(
+        [([float(i), 0.0],) for i in range(6)], "embedding array<double>"
+    )
+    monkeypatch.setattr(
+        K,
+        "cluster_features_arrow",
+        lambda points, centroids, col: [(0, 1, [0.0, 0.0]), (1, 1, [1.0, 0.0]), (5, 1, [5.0, 0.0])],
+    )
+    cfg = K.KMeansConfig(k=3, max_iter=2, tol=0.0, seed=1, method="arrow")
+    with pytest.raises(RuntimeError, match=r"missing \[2\], unexpected \[5\]"):
+        K.fit(df, cfg)
+
+
+def _tagged_jobs(spark, tag: str) -> list[int]:
+    """Ids of the jobs the status store holds under ``tag`` (stored with a
+    session/thread prefix, so matched on the suffix)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    ids = []
+    jobs = sc.statusStore().jobsList(None).iterator()
+    while jobs.hasNext():
+        j = jobs.next()
+        tags = j.jobTags().iterator()
+        while tags.hasNext():
+            t = str(tags.next())
+            if t == tag or t.endswith("-" + tag):
+                ids.append(j.jobId())
+                break
+    return ids
+
+
+def test_arrow_fit_job_count(spark):
+    """One Spark job per arrow iteration, plus the cache count and the
+    init sample: N + 2 jobs for max_iter=N, tol=0, no re-inits."""
+    import uuid
+
+    rng = np.random.default_rng(11)
+    centres = np.array([[0.0, 0.0, 0.0], [20.0, 0.0, 0.0], [0.0, 20.0, 0.0]])
+    pts = centres[np.arange(60) % 3] + rng.normal(size=(60, 3))
+    df = spark.createDataFrame(
+        [(row.tolist(),) for row in pts], "embedding array<double>"
+    )
+    n_iter = 3
+    tag = f"fit-jobs-{uuid.uuid4().hex}"
+    spark.addTag(tag)
+    try:
+        m = K.fit(df, K.KMeansConfig(k=3, max_iter=n_iter, tol=0.0, seed=4, method="arrow"))
+    finally:
+        spark.removeTag(tag)
+    assert m.reinit_count == 0 and m.n_iter == n_iter
+    assert len(_tagged_jobs(spark, tag)) == n_iter + 2
+
+
+def _reference_centroid_write(spark, centroids, path):
+    """The CLI's centroid writer as it was built on createDataFrame."""
+    from k_means_in_mapreduce_spark.sources.text_points import format_points
+
+    cents = spark.createDataFrame(
+        [(i, c) for i, c in enumerate(centroids)],
+        "cluster_id int, features array<double>",
+    )
+    format_points(cents).select(
+        F.concat_ws("\t", F.col("cluster_id").cast("string"), "point_str").alias("value")
+    ).coalesce(1).write.mode("overwrite").text(path)
+
+
+def _part_bytes(path) -> bytes:
+    import glob
+    import os
+
+    parts = sorted(glob.glob(os.path.join(path, "part-*")))
+    assert len(parts) == 1, parts
+    with open(parts[0], "rb") as fh:
+        return fh.read()
+
+
+EDGE_HISTORY = [
+    [[-0.0, 1e-7, 1e22, 12345678.9], [1.0, -2.5, 3e-300, 0.1]],
+    [[12345678.9, -0.0, 1e-7, -1e22], [0.30000000000000004, 5e-324, -0.0, 2.0]],
+]
+
+
+def test_cli_centroid_files_match_reference_writer(spark, tmp_path, monkeypatch):
+    """The CLI's final centroid file and its --fidelity per-iteration dirs
+    are byte-identical to the createDataFrame-built writer, on edge
+    doubles (-0.0, 1e-7, 1e22, 12345678.9, subnormals)."""
+    from k_means_in_mapreduce_spark import cli
+
+    inp = tmp_path / "pts.txt"
+    inp.write_text("<0.0, 0.0, 0.0, 0.0>\n<1.0, 1.0, 1.0, 1.0>\n<9.0, 9.0, 9.0, 9.0>\n")
+
+    def fake_fit(df, config):
+        return K.KMeansModel(
+            centroids=EDGE_HISTORY[-1],
+            n_iter=len(EDGE_HISTORY),
+            converged=False,
+            movement_history=[1.0] * len(EDGE_HISTORY),
+            centroid_history=EDGE_HISTORY,
+        )
+
+    monkeypatch.setattr(K, "fit", fake_fit)
+    out = str(tmp_path / "cents")
+    assert cli.main([str(inp), "2", "2", out, "4", "0", "2", "--fidelity"]) == 0
+
+    ref = str(tmp_path / "ref")
+    for got, cents in [(out, EDGE_HISTORY[-1])] + [
+        (f"{out}{i}", snap) for i, snap in enumerate(EDGE_HISTORY, start=1)
+    ]:
+        _reference_centroid_write(spark, cents, ref)
+        assert _part_bytes(got) == _part_bytes(ref), got
+    assert b"-0.0" in _part_bytes(out) and b"1.0E22" in _part_bytes(f"{out}1")

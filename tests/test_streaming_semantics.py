@@ -741,3 +741,33 @@ def test_streaming_kmeans_decay_discounts_idle_clusters(spark):
     # idle cluster 1's weight must halve each batch, not stay frozen
     assert model.weights[1] == w1_after_first * 0.25
     assert model.weights[0] > 0
+
+
+def test_stream_kmeans_scoring_schema_with_and_without_rows(spark, tmp_path):
+    """The scoring result is `cluster_id int, num_points bigint`, whether
+    the stream scored rows or none at all."""
+    import pyarrow.parquet as pq
+
+    from k_means_in_mapreduce_spark.streaming.windows import stream_kmeans_scoring
+
+    from .conftest import SF0001
+
+    want = [("cluster_id", "int"), ("num_points", "bigint")]
+    src = f"{SF0001}/embeddings.parquet"
+    dim = len(spark.read.parquet(src).first()["embedding"])
+    cents = [[0.0] * dim, [1.0] * dim]
+
+    scored = stream_kmeans_scoring(spark, SF0001, cents)
+    assert scored.dtypes == want
+    rows = scored.collect()
+    assert [r["cluster_id"] for r in rows] == sorted(r["cluster_id"] for r in rows)
+    assert sum(r["num_points"] for r in rows) == pq.read_metadata(src).num_rows
+
+    empty_dir = tmp_path / "sf_empty"
+    empty_dir.mkdir()
+    pq.write_table(
+        pq.read_table(src).slice(0, 0), str(empty_dir / "embeddings.parquet")
+    )
+    empty = stream_kmeans_scoring(spark, str(empty_dir), cents)
+    assert empty.dtypes == want
+    assert empty.collect() == []
