@@ -259,9 +259,10 @@ def _run_fit(
             print(_format_vetted(base_path, touchable), file=sys.stderr)
 
     # Fail fast like the reference (NumberFormatException kills the job,
-    # KMeans.java:269): wrong arity OR any non-numeric token. The parser's
-    # element-wise cast turns a bad token into a NULL element that would
-    # otherwise pass the arity check and poison centroids with NaN.
+    # KMeans.java:269): wrong arity OR any non-numeric or non-finite token.
+    # The parser turns such a token into a NULL element that would
+    # otherwise pass the arity check and poison centroids with NaN. This
+    # count is the job that parses the input and fills the cache.
     bad = pts.filter(
         (F.size("features") != dim)
         | F.exists("features", lambda x: x.isNull())
@@ -269,7 +270,7 @@ def _run_fit(
     if bad:
         print(
             f"{bad} input line(s) do not have the declared dim={dim} "
-            "or contain non-numeric values",
+            "or contain non-numeric or non-finite values",
             file=sys.stderr,
         )
         return 1

@@ -25,6 +25,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..sources.literal import json_literal
 
 ColumnOrName = Column | str
 
@@ -68,10 +71,16 @@ def scale(a: ColumnOrName, divisor: Column) -> Column:
     return F.transform(_col(a), lambda x: x / divisor)
 
 
+def vector_lit(v: Sequence[float]) -> Column:
+    """A constant array<double> plan literal."""
+    return json_literal([float(x) for x in v], T.ArrayType(T.DoubleType()))
+
+
 def centroid_matrix_lit(centroids: Sequence[Sequence[float]]) -> Column:
     """k×d centroid set as a constant array-of-arrays plan literal."""
-    return F.array(
-        *[F.array(*[F.lit(float(x)) for x in c]) for c in centroids]
+    return json_literal(
+        [[float(x) for x in c] for c in centroids],
+        T.ArrayType(T.ArrayType(T.DoubleType())),
     )
 
 

@@ -397,7 +397,7 @@ def points_random_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
 def points_text_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's RESULT egress end-to-end (S2, KMeans.java:148-150):
     computed centroids -> ``write_points`` text sink ('<a, b>' lines,
-    Point.toString) -> re-ingest with the expression parser -> aggregate.
+    Point.toString) -> re-ingest with ``parse_points`` -> aggregate.
     Exact because Spark's double->string cast is shortest-roundtrip
     (Double.toString), so the parsed values equal the computed means
     bit-for-bit and the oracle can skip the stringification."""

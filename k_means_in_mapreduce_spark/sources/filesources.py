@@ -314,10 +314,10 @@ def csv_corrupt_records_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_points_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's native on-disk format end-to-end: embeddings
     formatted as '<a, b, ...>' lines (Point.toString, Point.java:96-106),
-    written as a text file, re-ingested with the expression-only parser
-    (KMeans.java:261-274 semantics), then aggregated. Float->string->
-    double roundtrip is exact for float32 values printed at full
-    precision."""
+    written as a text file, re-ingested with the Arrow-kernel parser
+    (``text_points``; KMeans.java:261-274 semantics), then aggregated.
+    Float->string->double roundtrip is exact for float32 values printed at
+    full precision."""
     from .text_points import format_points, parse_points_df
 
     path = _scratch(sf_dir, "points_text")

@@ -5,7 +5,7 @@ from __future__ import annotations
 import json
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -28,6 +28,15 @@ def literal_frame(
     """
     struct = T.DataType.fromDDL(schema)
     names = [f.name for f in struct.fields]
-    text = json.dumps([dict(zip(names, row)) for row in rows])
-    parsed = F.from_json(F.lit(text), T.ArrayType(struct), {"mode": "FAILFAST"})
+    parsed = json_literal([dict(zip(names, row)) for row in rows], T.ArrayType(struct))
     return spark.range(0, 1, 1, 1).select(F.inline(parsed))
+
+
+def json_literal(value, data_type: T.DataType) -> Column:
+    """A constant column of ``data_type`` holding ``value`` (nested lists,
+    dicts and floats), built as ONE JSON string literal parsed by
+    ``from_json``: one py4j call however large the value is, where an
+    ``F.array`` of per-element ``F.lit`` makes one call per element. The
+    optimizer folds it to the same array literal. FAILFAST, and every
+    double comes back bit-identical (see :func:`literal_frame`)."""
+    return F.from_json(F.lit(json.dumps(value)), data_type, {"mode": "FAILFAST"})

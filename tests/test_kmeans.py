@@ -1,5 +1,7 @@
 """Reference-semantics invariants for the k-means surface (SURVEY §5.2)."""
 
+import json
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -27,6 +29,19 @@ def test_tiebreak_lowest_index(spark):
     cents = [[1.0, 1.0], [-1.0, 1.0], [1.0, -1.0]]
     got = K.assign_clusters(df, cents, "features").first()["cluster_id"]
     assert got == 0
+
+
+def test_centroid_matrix_lit_folds_to_a_bit_exact_literal(spark):
+    """The k×d plan literal is one JSON literal that the optimizer folds
+    to an array constant holding the same doubles, bit for bit."""
+    from k_means_in_mapreduce_spark.functions.vector import centroid_matrix_lit
+
+    cents = [[-0.0, 5e-324, 1e22, 0.1], [1.7976931348623157e308, -2.5, 3e-300, 12345678.9]]
+    df = spark.range(1).select(centroid_matrix_lit(cents).alias("c"))
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "from_json" not in plan
+    got = np.array(df.first()["c"], dtype=np.float64)
+    assert got.tobytes() == np.array(cents, dtype=np.float64).tobytes()
 
 
 def _numpy_lloyd(X, init, n_iter):
@@ -222,20 +237,26 @@ def test_mllib_model_persistence_roundtrip(spark, tmp_path, emb):
     assert a == b
 
 
-def test_cli_rejects_non_numeric_tokens_and_negative_epsilon(spark, tmp_path):
-    """Reference parity for malformed input: a non-numeric token must fail
-    the run (KMeans.java:269 dies on NumberFormatException) instead of
-    becoming a NULL element that passes the arity gate and poisons the
-    centroids with NaN; a negative epsilon is rejected at argument
-    validation like the other numeric args."""
+def test_cli_rejects_non_numeric_tokens_and_negative_epsilon(spark, tmp_path, capsys):
+    """Reference parity for malformed input: a non-numeric or non-finite
+    token must fail the run (KMeans.java:269 dies on NumberFormatException)
+    instead of becoming a NULL element that passes the arity gate and
+    poisons the centroids with NaN; a negative epsilon is rejected at
+    argument validation like the other numeric args."""
     from k_means_in_mapreduce_spark.cli import main
 
-    inp = tmp_path / "pts"
-    inp.mkdir()
-    (inp / "points.txt").write_text("<1.0, 2.0>\n<3.0, abc>\n<5.0, 6.0>\n")
     out = str(tmp_path / "out")
-    rc = main([str(inp), "2", "3", out, "2", "0.001", "2"])
-    assert rc == 1
+    for i, bad_line in enumerate(
+        ["<3.0, abc>", "<NaN, 1.0>", "<Infinity, 1.0>", "<1e400, 1.0>"]
+    ):
+        inp = tmp_path / f"pts{i}"
+        inp.mkdir()
+        (inp / "points.txt").write_text(f"<1.0, 2.0>\n{bad_line}\n<5.0, 6.0>\n")
+        rc = main([str(inp), "2", "3", out, "2", "0.001", "2"])
+        assert rc == 1, bad_line
+        err = capsys.readouterr().err
+        assert "1 input line(s) do not have the declared dim=2" in err, bad_line
+        assert "non-numeric or non-finite values" in err, bad_line
 
     rc2 = main([str(inp), "2", "3", out, "2", "-0.5", "2"])
     assert rc2 == 2
@@ -640,6 +661,33 @@ def test_arrow_fit_job_count(spark):
         spark.removeTag(tag)
     assert m.reinit_count == 0 and m.n_iter == n_iter
     assert len(_tagged_jobs(spark, tag)) == n_iter + 2
+
+
+def test_cli_job_count(spark, tmp_path):
+    """An N-iteration CLI run is N + 6 Spark jobs: the input is parsed
+    inside the validation count that fills the cache, so a second pass
+    over the text shows up here as an extra job."""
+    import uuid
+
+    from k_means_in_mapreduce_spark.cli import main
+
+    rng = np.random.default_rng(5)
+    centres = np.array([[0.0, 0.0, 0.0], [20.0, 0.0, 0.0], [0.0, 20.0, 0.0]])
+    pts = centres[np.arange(60) % 3] + rng.normal(size=(60, 3))
+    inp = tmp_path / "points.txt"
+    inp.write_text("".join("<" + ", ".join(map(repr, p)) + ">\n" for p in pts.tolist()))
+    n_iter = 3
+    tag = f"cli-jobs-{uuid.uuid4().hex}"
+    spark.addTag(tag)
+    try:
+        rc = main([str(inp), "3", str(n_iter), str(tmp_path / "out"), "3", "0", "2"])
+    finally:
+        spark.removeTag(tag)
+    assert rc == 0
+    with open(tmp_path / "out" / "_run_report.json") as fh:
+        report = json.load(fh)
+    assert report["iterations"] == n_iter and report["empty_cluster_reinits"] == 0
+    assert len(_tagged_jobs(spark, tag)) == n_iter + 6
 
 
 def _reference_centroid_write(spark, centroids, path):
